@@ -17,9 +17,9 @@ Distinct from ``functions/fuzz.lcs_len`` which computes the longest
 common SUBSEQUENCE (non-contiguous, the Indel-ratio ingredient).
 
 100 TB plan: the UDF runs strictly AFTER candidate pruning (never
-corpus×corpus) as an Arrow-batched pandas UDF; the per-pair loop inside
-the batch is the same documented trade as ``_jaccard_udf`` (the
-automaton is pure CPU on short strings; Arrow amortizes transfer).
+corpus×corpus) as an Arrow-batched pandas UDF with a per-pair loop
+inside the batch (the automaton is pure CPU on short strings and has
+no native Spark equivalent; Arrow amortizes transfer).
 """
 
 from __future__ import annotations

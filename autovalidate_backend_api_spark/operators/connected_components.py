@@ -25,6 +25,7 @@ Scale notes:
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -82,25 +83,31 @@ def _driver_union_find(vertices: DataFrame, edges: DataFrame) -> DataFrame:
     shuffle jobs to propagate labels across what is, in absolute terms,
     a few MB of longs — pure fixed cost. Collecting ≤ cc_driver_max_edges
     rows and solving in-process replaces 4-8 Spark jobs with one collect
-    + one createDataFrame. The collect goes through Arrow (``toPandas``)
+    + one local relation. The collect goes through Arrow (``toPandas``)
     — row-collect() materializes one PySpark Row object per edge, which
     at the 2M-edge cap is hundreds of MB of Python objects before
     union-find even starts (ADVICE r3); Arrow lands two flat columns.
+    The labels go back the same way: a pandas frame through Arrow plans
+    as a LocalTableScan, where a Python list is a PythonRDD whose every
+    scan starts a Python worker (~150-200 ms per task before its first
+    row). An empty pandas frame still takes the PythonRDD route, so no
+    edges short-circuits to the all-singletons projection.
     Representative = min member per component (same contract as the
     distributed paths; verified against them in tests/test_cc.py).
     """
     spark = edges.sparkSession
     pdf = edges.select("src", "dst").filter(F.col("src") != F.col("dst")).toPandas()
     labeled = union_find_labels(list(zip(pdf["src"].tolist(), pdf["dst"].tolist())))
+    if not labeled:
+        return vertices.select("key", F.col("key").alias("cluster_rep"))
     key_type = edges.schema["src"].dataType
     schema = T.StructType(
         [T.StructField("key", key_type), T.StructField("cluster_rep", key_type)]
     )
-    labels = spark.createDataFrame(labeled, schema)
-    touched = spark.createDataFrame(
-        [(v,) for v, _ in labeled], T.StructType([T.StructField("key", key_type)])
+    labels = spark.createDataFrame(
+        pd.DataFrame(labeled, columns=["key", "cluster_rep"]), schema
     )
-    singletons = vertices.join(touched, "key", "left_anti").select(
+    singletons = vertices.join(labels.select("key"), "key", "left_anti").select(
         "key", F.col("key").alias("cluster_rep")
     )
     return labels.unionByName(singletons)

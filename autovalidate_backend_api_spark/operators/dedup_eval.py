@@ -65,7 +65,10 @@ def exact_pairs(
     ``max_repos_per_hash``: pair expansion is bounded by cap², and the
     drop is part of the operator's contract — pairs that share ONLY
     boilerplate shingles are not emitted, and their intersection counts
-    exclude dropped shingles). ``None`` (the default, used by every
+    exclude dropped shingles). The per-doc sizes ``na``/``nb`` are
+    computed over the same capped index, so a caller's jaccard
+    ``ni / (na + nb - ni)`` changes in numerator AND denominator, as in
+    ``repo_file_overlap_pairs``. ``None`` (the default, used by every
     eval/calibration gate) keeps the join exact: eval corpora are
     sample-sized by design. Set it when pointing this at a full corpus.
     """

@@ -39,12 +39,6 @@ def exact_reps(hashed: DataFrame, salt_buckets: int = SALT_BUCKETS) -> DataFrame
     )
 
 
-def exact_groups(hashed: DataFrame) -> DataFrame:
-    """sha → group size + lexicographic-min representative key
-    (FIXTURES.md `sha_groups`)."""
-    return exact_reps(hashed).select("sha", "n", "rep_key")
-
-
 def exact_pairs(hashed: DataFrame, reps: DataFrame | None = None) -> DataFrame:
     """Star edges (rep_key → member) for every sha group with n > 1.
 

@@ -30,6 +30,7 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -88,13 +89,21 @@ def run_pipeline(
     verbose: bool = True,
 ) -> PipelineResult:
     """checkpoint_dir=None disables durable checkpoints (bench mode):
-    stage outputs are persisted in memory/disk cache instead — same
-    dataflow, no resumability. verbose=False skips the dropped-bucket
-    count actions (two extra Spark jobs) for benchmarking.
+    same dataflow, no resumability. Each stage output is then a
+    lineage-free LOCAL checkpoint (``localCheckpoint``, materialized by
+    the stage's one row-count job), so every later stage plans over a
+    leaf — as it does over the parquet checkpoints — instead of over the
+    whole cascade's lineage. Storage contract of this mode: checkpoint
+    blocks are freed when the returned frames are garbage-collected,
+    NOT by ``spark.catalog.clearCache()``; a lost executor loses them
+    for good (a local checkpoint cannot recompute), so runs that must
+    survive executor loss pass ``checkpoint_dir``. verbose=False skips
+    the dropped-bucket count actions (two extra Spark jobs) for
+    benchmarking.
 
     Stages materialize SEQUENTIALLY — deliberate, measured (r4): driver-
     thread concurrency for the independent branches (keymap ∥ Stage-A
-    aggs; Stage B ∥ Stage C over the persisted signature table) was
+    aggs; Stage B ∥ Stage C over the materialized signature table) was
     implemented and benchmarked at 147k files / local[8]: B and C each
     stretched from 11.5+8.0 s sequential to ~20 s running concurrently
     (wall saved ≈ 0; whole-pipeline A/B same-session: 47.3-49.7 s
@@ -120,9 +129,10 @@ def run_pipeline(
             rows: dict = {}
 
             def get_or_compute(self, stage, compute):
-                df = compute().persist()
-                # materialize so stage timings are honest; the count is
-                # kept so downstream dispatch never re-counts (one job)
+                # eager=False: the count below both fills the checkpoint
+                # and cuts the lineage in one job; it is kept so that
+                # downstream dispatch never re-counts
+                df = compute().localCheckpoint(eager=False)
                 self.rows[stage] = df.count()
                 return df
 
@@ -193,17 +203,18 @@ def run_pipeline(
     )
 
     # ---- signatures: one Arrow pass over sha-survivors ------------------
-    # hash-partitioned by key: the four verify joins (Stage B src/dst,
-    # Stage C phase-1 + phase-2) then reuse this partitioning instead of
-    # re-exchanging the fat signature table each time (measured 1.8×
-    # on the verify stage; partitioning survives persist() in ephemeral
-    # mode — on Iceberg, bucket the table by key for the same effect).
-    # The repartition sits BEFORE the signature UDF (r6): the exchange
-    # then carries (key, content) — ~1 KB/row — instead of the post-UDF
-    # rows with shingle/band/winnow arrays (~3.5 KB/row), a 3× shuffle-
-    # byte cut on the one content-bearing exchange of the pipeline, and
-    # hash partitioning is preserved through the row-wise UDF so every
-    # downstream join still reuses it (plan-pinned by test_plans).
+    # hash-partitioned by key, BEFORE the signature UDF (r6): the
+    # exchange then carries (key, content) — ~1 KB/row — instead of the
+    # post-UDF rows with shingle/band/winnow arrays (~3.5 KB/row), a 3×
+    # shuffle-byte cut on the one content-bearing exchange of the
+    # pipeline. The planner does not see this partitioning downstream:
+    # AQE reports a local checkpoint's as unknown, and a persist() would
+    # hide it too (canChangeCachedPlanOutputPartitioning). The four verify
+    # joins (Stage B src/dst, Stage C phase-1 + phase-2) rely on AQE
+    # broadcasting their pair side, which adds no Exchange over this
+    # table; a sort-merge verify join at scale re-exchanges it either way
+    # (checked with autoBroadcastJoinThreshold=-1). On Iceberg, bucket
+    # the table by key.
     sigs = timed(
         "signatures",
         lambda: ckpt.get_or_compute(
@@ -292,7 +303,7 @@ def run_pipeline(
             # small-edge-set fast path (the overwhelmingly common case —
             # dup pairs ≪ corpus): solve CC with driver union-find and
             # translate ids → keys with BROADCAST map-side joins over the
-            # persisted keymap. Only edge-TOUCHED vertices (≤ 2·edges)
+            # materialized keymap. Only edge-TOUCHED vertices (≤ 2·edges)
             # enter any join; every untouched file is its own
             # representative by identity — no wide shuffle of the full
             # 147k/10^12-row label table just to translate singletons.
@@ -312,8 +323,10 @@ def run_pipeline(
                     F.col("key_str").alias("key"),
                     F.col("key_str").alias("cluster_rep"),
                 )
+            # from pandas through Arrow: a LocalTableScan, where a Python
+            # list would be a PythonRDD paying a Python worker per scan
             t_labels = spark.createDataFrame(
-                labeled, "id bigint, comp bigint"
+                pd.DataFrame(labeled, columns=["id", "comp"]), "id bigint, comp bigint"
             )
             # broadcast only while the label table is actually small:
             # near the 2M-edge dispatch cap it can reach ~4M rows

@@ -10,6 +10,8 @@ from __future__ import annotations
 
 import dataclasses
 
+import pandas as pd
+
 from autovalidate_backend_api_spark.config import PINNED
 from autovalidate_backend_api_spark.operators.connected_components import (
     connected_components,
@@ -18,10 +20,19 @@ from autovalidate_backend_api_spark.operators.connected_components import (
 DIST_CFG = dataclasses.replace(PINNED, cc_driver_max_edges=0)
 
 
-def _run(spark, vertices, edges, cfg=DIST_CFG):
-    vdf = spark.createDataFrame([(v,) for v in vertices], "key string")
-    edf = spark.createDataFrame(edges, "src string, dst string")
+def _run(spark, vertices, edges, cfg=DIST_CFG, key_type="string"):
+    # inputs from pandas through Arrow (local relations), so they bring no
+    # PythonRDD into the output's lineage
+    vdf = spark.createDataFrame(pd.DataFrame({"key": vertices}), f"key {key_type}")
+    edf = spark.createDataFrame(
+        pd.DataFrame(edges, columns=["src", "dst"]), f"src {key_type}, dst {key_type}"
+    )
     out = connected_components(vdf, edf, cfg)
+    if cfg.cc_driver_max_edges > 0:
+        # driver union-find: its labels are a local relation, so reading
+        # the result starts no Python worker
+        lineage = out._jdf.queryExecution().toRdd().toDebugString()
+        assert "PythonRDD" not in lineage, lineage
     return {r["key"]: r["cluster_rep"] for r in out.collect()}
 
 
@@ -60,11 +71,7 @@ def test_input_order_invariance(spark):
 def test_empty_edges_all_singletons(spark):
     # both dispatch branches must handle zero edges
     for cfg in (PINNED, DIST_CFG):
-        vdf = spark.createDataFrame([(v,) for v in "abc"], "key string")
-        edf = spark.createDataFrame([], "src string, dst string")
-        out = connected_components(vdf, edf, cfg)
-        got = {r["key"]: r["cluster_rep"] for r in out.collect()}
-        assert got == {"a": "a", "b": "b", "c": "c"}
+        assert _run(spark, list("abc"), [], cfg) == {"a": "a", "b": "b", "c": "c"}
 
 
 def test_nonconvergence_raises(spark):
@@ -190,3 +197,11 @@ def test_driver_union_find_matches_distributed(spark):
         dist = _run(spark, verts, edges, DIST_CFG)      # forced min-label
         star = _run_star(spark, verts, edges)
         assert driver == dist == star
+        # bigint keys (the pipeline's ids); the order-preserving id map
+        # keeps the min-member representative
+        ids = {k: i for i, k in enumerate(sorted(verts))}
+        by_id = _run(
+            spark, [ids[v] for v in verts], [(ids[a], ids[b]) for a, b in edges],
+            PINNED, "bigint",
+        )
+        assert by_id == {ids[k]: ids[r] for k, r in driver.items()}

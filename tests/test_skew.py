@@ -29,7 +29,9 @@ def _skewed_corpus(spark, n=600, planted=25):
 def test_hot_buckets_dropped_and_recall_survives(spark):
     corpus = _skewed_corpus(spark)
     n_docs = corpus.count()
-    sigs = with_signatures(corpus, PINNED, include_winnow=False).persist()
+    # a lineage-free leaf, like run_pipeline's stage outputs, so the plans
+    # below hold only Stage B's own operators
+    sigs = with_signatures(corpus, PINNED, include_winnow=False).localCheckpoint()
     cands, dropped = B.candidate_pairs(sigs, PINNED)
     n_cands = cands.count()
     # the boilerplate bands bucket half the corpus together — they MUST
@@ -39,6 +41,9 @@ def test_hot_buckets_dropped_and_recall_survives(spark):
     # every planted twin still reaches verify via its non-boilerplate
     # bands and passes the exact-Jaccard threshold
     verified = B.verify_pairs(cands, sigs, PINNED)
+    # the verify Jaccard is JVM-native: no Python worker in this stage
+    plan = verified._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan, plan
     twins = {
         (min(r["src"], r["dst"]), max(r["src"], r["dst"]))
         for r in verified.filter(F.col("jaccard") >= PINNED.jaccard_threshold).collect()
@@ -46,7 +51,40 @@ def test_hot_buckets_dropped_and_recall_survives(spark):
     expected = {(f"doc{i:04d}", f"twin{i:04d}") for i in range(25)}
     missing = expected - twins
     assert not missing, f"hot-bucket drops lost planted pairs: {sorted(missing)[:5]}"
-    sigs.unpersist()
+
+
+def test_native_jaccard_matches_reference(spark):
+    """``with_jaccard`` equals ``hashing.jaccard`` bit for bit, including
+    empty ∪ empty = 1.0, which must not raise DIVIDE_BY_ZERO under ANSI."""
+    import numpy as np
+
+    from autovalidate_backend_api_spark.functions import hashing as H
+
+    rng = np.random.default_rng(5)
+
+    def sorted_distinct():
+        return np.unique(rng.integers(0, 400, size=int(rng.integers(0, 120)))).tolist()
+
+    cases = [([], []), ([1, 2, 3], [4, 5]), ([7, 8, 9], [7, 8, 9]), ([], [3]), ([-5, 2], [2])]
+    cases += [(sorted_distinct(), sorted_distinct()) for _ in range(60)]
+    df = spark.createDataFrame(
+        [(i, a, b) for i, (a, b) in enumerate(cases)], "i int, a array<bigint>, b array<bigint>"
+    )
+    got = dict(B.with_jaccard(df, "a", "b").select("i", "jaccard").collect())
+    want = {i: H.jaccard(a, b) for i, (a, b) in enumerate(cases)}
+    assert got == want
+    assert got[0] == 1.0 and got[1] == 0.0 and got[2] == 1.0
+
+
+def test_null_band_family_keeps_the_other(spark):
+    """ADVICE r6: a NULL band array (nullable once signatures are re-read
+    from parquet) drops only its own family's (bucket, key) rows."""
+    sigs = spark.createDataFrame(
+        [(1, 3, [10, 11], None), (2, 3, None, [20]), (3, 3, [30], [31, 32])],
+        "key bigint, n_shingles int, bands_tok array<bigint>, bands_chr array<bigint>",
+    )
+    got = sorted((r["bucket"], r["key"]) for r in B.explode_bands(sigs).collect())
+    assert got == [(10, 1), (11, 1), (20, 2), (30, 3), (31, 3), (32, 3)]
 
 
 def test_fingerprint_poor_doc_in_hot_bucket_still_found(spark):
