@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from autovalidate_backend_api_spark.functions.normalize import normalize_text_col
+from autovalidate_backend_api_spark.operators.stage_b_lsh import with_intersect_size
 
 
 def _token_ngrams(tokens: Column, k: int) -> Column:
@@ -1781,47 +1782,69 @@ def token_bag_clone_pairs(
     have high df, so they sort LAST and are never index keys for any
     document longer than the prefix — the posting lists that drive
     candidate generation are rare-token lists by construction (this is
-    exactly why SourcererCC scales to 428M files in the paper).
-    Verification is pair-keyed joins; a skewed clone group is many
-    pairs, never a widened row. The token-count table is persisted and
-    reused across the sizing/df/verify branches (one tokenization).
+    exactly why SourcererCC scales to 428M files in the paper). The
+    prefix self-join stays a join on ``tok`` (AQE can split a hot
+    posting list) and a skewed clone group is many pairs, never a
+    widened row. The per-doc frame ``(doc_id, n, prefix, bag)`` is
+    built once (one tokenization, one (doc, tok) count, one df) and
+    persisted: it feeds the prefix join and both sides of the verify.
+    Verification joins each candidate to the two docs' bags and takes
+    ``size(array_intersect)`` once per pair — no per-token expansion.
+
+    Multiset encoding: a doc's bag is the SET of strings
+    ``tok ‖ '\\x00' ‖ i`` for ``i`` in ``1..c`` (``c`` = the token's count
+    in the doc). The encoding is injective — split at the LAST
+    ``'\\x00'``; the suffix is the decimal ``i``, which has no NUL — so
+    the bag has exactly ``n`` distinct elements, and ``(tok, i)`` lies in
+    both bags iff ``i ≤ min(ca, cb)``. Hence ``|A ∩ B| = Σ min(ca, cb)``,
+    the multiset overlap. The elements stay strings: ``array_intersect``
+    hashes elements with proper equals (strings, longs), while struct
+    elements fall back to pairwise comparison.
     """
     toks = F.filter(F.split(F.col("text"), r"\s+"), lambda t: t != "")
     tc = (
         docs.select("doc_id", F.explode(toks).alias("tok"))
         .groupBy("doc_id", "tok")
         .agg(F.count("*").cast("bigint").alias("c"))
-        .persist()
     )
-    sz = tc.groupBy("doc_id").agg(F.sum("c").cast("bigint").alias("n"))
-    dfreq = tc.groupBy("tok").agg(F.count("*").cast("bigint").alias("df"))
+    by_doc = Window.partitionBy("doc_id")
+    ranked = (
+        tc.withColumn("df", F.count("*").over(Window.partitionBy("tok")))
+        .withColumn("n", F.sum("c").over(by_doc))
+        .withColumn(
+            "pos", F.sum("c").over(by_doc.orderBy("df", "tok")) - F.col("c") + 1
+        )
+    )
     ceil_theta_n = F.expr(
         f"CAST(({theta_num} * n + {theta_den} - 1) DIV {theta_den} AS BIGINT)"
     )
-    w = Window.partitionBy("doc_id").orderBy("df", "tok")
-    pref = (
-        tc.join(dfreq, "tok")
-        .join(sz, "doc_id")
-        .withColumn("pos", F.sum("c").over(w) - F.col("c") + 1)
-        .filter(F.col("pos") <= F.col("n") - ceil_theta_n + 1)
-        .select("doc_id", "tok")
+    bag = F.transform(
+        F.sequence(F.lit(1), F.col("c").cast("int")),
+        lambda i: F.concat(F.col("tok"), F.lit("\x00"), i.cast("string")),
+    )
+    per_doc = (
+        ranked.groupBy("doc_id")
+        .agg(
+            F.max("n").alias("n"),
+            F.collect_list(
+                F.when(F.col("pos") <= F.col("n") - ceil_theta_n + 1, F.col("tok"))
+            ).alias("prefix"),
+            F.flatten(F.collect_list(bag)).alias("bag"),
+        )
+        .persist()  # three consumers: both prefix sides and the verify
     )
     # Candidates carry the two doc sizes through the prefix join so the
     # published LENGTH FILTER (SSJoin/PPJoin — priced by
-    # ssjoin_filter_report) prunes BEFORE the token-expansion verify:
-    # overlap ≤ min(na, nb), so a pair can only reach θ when
-    # min·den ≥ num·max — provably lossless, and on a low-entropy
-    # corpus (posting lists are not rare) it cuts the candidate set the
-    # verify join must expand by ~3× (r6 measured: 737k → 212k
-    # candidates at sf0.1; verify intermediate shrinks by the same
-    # factor).
-    pref_sz = pref.join(sz, "doc_id")
+    # ssjoin_filter_report) prunes BEFORE the verify: overlap ≤
+    # min(na, nb), so a pair can only reach θ when min·den ≥ num·max —
+    # provably lossless, and on a low-entropy corpus (posting lists are
+    # not rare) it cuts the candidate set by ~3× (r6 measured: 737k →
+    # 212k candidates at sf0.1).
+    pref = per_doc.select("doc_id", "n", F.explode("prefix").alias("tok"))
     cand = (
-        pref_sz.select(F.col("doc_id").alias("src"), "tok", F.col("n").alias("na"))
+        pref.select(F.col("doc_id").alias("src"), "tok", F.col("n").alias("na"))
         .join(
-            pref_sz.select(
-                F.col("doc_id").alias("dst"), "tok", F.col("n").alias("nb")
-            ),
+            pref.select(F.col("doc_id").alias("dst"), "tok", F.col("n").alias("nb")),
             "tok",
         )
         .filter(F.col("src") < F.col("dst"))
@@ -1830,28 +1853,26 @@ def token_bag_clone_pairs(
         )
         .select("src", "dst", "na", "nb")
         .distinct()
-        .persist()  # consumed twice: verify-join spine + final sizes
     )
-    ta = tc.select(F.col("doc_id").alias("src"), "tok", F.col("c").alias("ca"))
-    tb = tc.select(F.col("doc_id").alias("dst"), "tok", F.col("c").alias("cb"))
-    ov = (
-        cand.select("src", "dst")
-        .join(ta, "src")
-        .join(tb, ["dst", "tok"])
-        .groupBy("src", "dst")
-        .agg(F.sum(F.least("ca", "cb")).cast("bigint").alias("overlap"))
+    bags = cand.join(
+        per_doc.select(F.col("doc_id").alias("src"), F.col("bag").alias("bag_a")),
+        "src",
+    ).join(
+        per_doc.select(F.col("doc_id").alias("dst"), F.col("bag").alias("bag_b")),
+        "dst",
     )
     mx = F.greatest(F.col("na"), F.col("nb"))
+    overlap = F.col("overlap").cast("bigint")
     return (
-        ov.join(cand, ["src", "dst"])
-        .filter(F.col("overlap") * theta_den >= theta_num * mx)
+        with_intersect_size(bags, "bag_a", "bag_b", "overlap")
+        .filter(overlap * theta_den >= theta_num * mx)
         .select(
             "src",
             "dst",
-            "overlap",
+            overlap.alias("overlap"),
             "na",
             "nb",
-            F.round(F.col("overlap") / mx, 6).alias("sim"),
+            F.round(overlap / mx, 6).alias("sim"),
         )
     )
 

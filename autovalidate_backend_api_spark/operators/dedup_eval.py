@@ -694,12 +694,12 @@ def ssjoin_filter_report(
     Stages (set semantics over ``doc_id, token``; θ = num/den exact):
 
     - ``prefix``: pairs sharing ≥1 token whose per-doc position (in
-      global (df asc, token asc) rarity order) lies in the Jaccard
+      (df asc, token asc) rarity order) lies in the Jaccard
       prefix ``n - ⌈θ·n⌉ + 1`` of BOTH docs.
     - ``prefix_length``: + the length filter ``min·den ≥ num·max``
       (a pair can't reach θ when sizes alone cap Jaccard below it).
     - ``prefix_length_positional``: + PPJoin's positional filter on
-      the FIRST common prefix token (min global rank): the overlap
+      the FIRST common prefix token (min (df, token)): the overlap
       upper bound ``1 + min(nx - px, ny - py)`` must reach
       ``α = ⌈num·(nx+ny)/(num+den)⌉`` — integer cross-multiplied as
       ``ubound·(num+den) ≥ num·(nx+ny)``.
@@ -710,101 +710,86 @@ def ssjoin_filter_report(
       certifies 0 live (the lsh_recall_report discipline: claims as
       measured numbers).
 
-    All counts are exact BIGINTs; zero floats anywhere. The global
-    rarity window runs over Θ(|vocab|) rows; candidate generation is
-    prefix-posting equi-joins (rare tokens by construction — the
-    SourcererCC argument); verification here is the full inverted-
-    index join because the REPORT needs the exact baseline — the
-    production join (token_bag_clone_pairs) verifies only candidates.
+    All counts are exact BIGINTs; zero floats anywhere. Ranks come from
+    a window per doc, df from a window per token; nothing is ranked
+    over the whole vocabulary. Candidates are prefix-token collisions
+    (rare tokens by construction — the SourcererCC argument), and the
+    report also needs the exact baseline, so ONE inverted-index
+    self-join on ``tok`` serves both: each pair group carries its exact
+    overlap and its first common prefix token, and one global
+    aggregation counts every stage. The production join
+    (token_bag_clone_pairs) joins only prefix postings and verifies
+    only candidates.
     """
     num, den = theta_num, theta_den
-    # persisted: consumed by sz, dft, the rank join AND both sides of
-    # the exact inverted-index verify — unpersisted lineage re-derived
-    # the distinct token table (corpus tokenize + exchange) five times
-    tc = (
-        token_rows.select("doc_id", F.col(token_col).alias("tok"))
-        .distinct()
-        .persist()
-    )
-    sz = tc.groupBy("doc_id").agg(F.count("*").cast("bigint").alias("n"))
-    dft = tc.groupBy("tok").agg(F.count("*").cast("bigint").alias("df"))
-    rk = dft.select(
-        "tok",
-        F.row_number()
-        .over(Window.orderBy(F.col("df").asc(), F.col("tok").asc()))
-        .cast("bigint")
-        .alias("trank"),
-    )
-    tr = tc.join(rk, "tok").join(sz, "doc_id")
-    ps = tr.select(
-        "doc_id",
-        "tok",
-        "trank",
-        "n",
-        F.row_number()
-        .over(Window.partitionBy("doc_id").orderBy("trank"))
-        .cast("bigint")
-        .alias("p"),
-    )
+    tc = token_rows.select("doc_id", F.col(token_col).alias("tok")).distinct()
+    # p ranks a doc's tokens by (df, tok). The twin ranks them by a
+    # global row_number over (df, tok), a strictly monotone relabelling
+    # of it, so both engines give every doc the same p and prefix.
+    by_doc = Window.partitionBy("doc_id")
     plen = F.col("n") - F.expr(f"({num} * n + {den} - 1) div {den}") + 1
-    pref = ps.filter(F.col("p") <= plen).select("doc_id", "tok", "trank", "p", "n")
-    a, b = pref.alias("a"), pref.alias("b")
-    shared = a.join(b, "tok").filter(F.col("a.doc_id") < F.col("b.doc_id"))
-    cand = (
-        shared.select(
+    idx = (
+        tc.withColumn("df", F.count("*").over(Window.partitionBy("tok")))
+        .withColumn("n", F.count("*").over(by_doc))
+        .withColumn("p", F.row_number().over(by_doc.orderBy("df", "tok")))
+        .withColumn("inpref", F.col("p") <= plen)
+    )
+    a, b = idx.alias("a"), idx.alias("b")
+    # One self-join on tok. A pair that shares a prefix token shares a
+    # token, so every prefix candidate is a group here, and the min of
+    # (df, tok, px, py) over the tokens in BOTH prefixes is exactly the
+    # first common prefix token the candidate-only join would find; it
+    # is NULL for pairs that share no prefix token (not candidates).
+    # count(*) over all shared tokens is the exact set overlap.
+    in_both = F.col("a.inpref") & F.col("b.inpref")
+    pairs = (
+        a.join(b, "tok")
+        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
+        .groupBy(
             F.col("a.doc_id").alias("x"),
             F.col("b.doc_id").alias("y"),
-            F.struct(
-                F.col("a.trank").alias("trank"),
-                F.col("a.p").alias("px"),
-                F.col("b.p").alias("py"),
-            ).alias("m"),
             F.col("a.n").alias("nx"),
             F.col("b.n").alias("ny"),
         )
-        .groupBy("x", "y", "nx", "ny")
-        .agg(F.min("m").alias("m"))
-        .persist()
-    )
-    lengthok = cand.filter(
-        F.least("nx", "ny") * den >= num * F.greatest("nx", "ny")
-    ).persist()
-    ubound = F.lit(1) + F.least(
-        F.col("nx") - F.col("m.px"), F.col("ny") - F.col("m.py")
-    )
-    positional = lengthok.filter(
-        ubound * (num + den) >= num * (F.col("nx") + F.col("ny"))
-    ).persist()
-    ta, tb = tc.alias("ta"), tc.alias("tb")
-    inter = (
-        ta.join(tb, "tok")
-        .filter(F.col("ta.doc_id") < F.col("tb.doc_id"))
-        .groupBy(F.col("ta.doc_id").alias("x"), F.col("tb.doc_id").alias("y"))
-        .agg(F.count("*").cast("bigint").alias("o"))
-    )
-    nx = sz.select(F.col("doc_id").alias("x"), F.col("n").alias("nx"))
-    ny = sz.select(F.col("doc_id").alias("y"), F.col("n").alias("ny"))
-    verified = (
-        inter.join(nx, "x")
-        .join(ny, "y")
-        .filter(F.col("o") * (num + den) >= num * (F.col("nx") + F.col("ny")))
-        .select("x", "y")
-        .persist()
-    )
-    missed = verified.join(positional.select("x", "y"), ["x", "y"], "left_anti")
-
-    def row(stage: str, df_: DataFrame) -> DataFrame:
-        return df_.agg(
-            F.lit(stage).alias("stage"),
-            F.count("*").cast("bigint").alias("n_pairs"),
+        .agg(
+            F.count("*").alias("o"),
+            F.min(
+                F.when(
+                    in_both,
+                    F.struct(
+                        F.col("a.df").alias("df"),
+                        F.col("tok"),
+                        F.col("a.p").alias("px"),
+                        F.col("b.p").alias("py"),
+                    ),
+                )
+            ).alias("m"),
         )
-
-    return (
-        row("prefix", cand)
-        .unionByName(row("prefix_length", lengthok))
-        .unionByName(row("prefix_length_positional", positional))
-        .unionByName(row("verified", verified))
-        .unionByName(row("verified_missed_by_filters", missed))
+    )
+    nx, ny = F.col("nx"), F.col("ny")
+    prefix = F.col("m").isNotNull()
+    length = prefix & (F.least(nx, ny) * den >= num * F.greatest(nx, ny))
+    ubound = F.lit(1) + F.least(nx - F.col("m.px"), ny - F.col("m.py"))
+    positional = length & (ubound * (num + den) >= num * (nx + ny))
+    verified = F.col("o") * (num + den) >= num * (nx + ny)
+    stages = {
+        "prefix": prefix,
+        "prefix_length": length,
+        "prefix_length_positional": positional,
+        "verified": verified,
+        # the cascade is lossless, so this certifies 0 live
+        "verified_missed_by_filters": verified & ~positional,
+    }
+    counts = pairs.agg(*[F.count_if(c).alias(s) for s, c in stages.items()])
+    return counts.select(
+        F.inline(
+            F.array(
+                *[
+                    F.struct(F.lit(s).alias("stage"), F.col(s).alias("n_pairs"))
+                    for s in stages
+                ]
+            )
+        )
     )
 
 

@@ -33,6 +33,16 @@ from pyspark.sql import functions as F
 from autovalidate_backend_api_spark.config import PipelineConfig, PINNED
 
 
+def with_intersect_size(df: DataFrame, a: str, b: str, name: str) -> DataFrame:
+    """``df`` plus ``name`` = ``size(array_intersect(a, b))``, computed
+    ONCE per row behind a one-element explode. A filter on ``name`` (or
+    on anything derived from it) cannot be pushed below a Generate, so
+    Catalyst cannot copy the intersect into a join condition below,
+    where it would run once per reference (no CSE in join conditions).
+    """
+    return df.withColumn(name, F.explode(F.array(F.size(F.array_intersect(a, b)))))
+
+
 def with_jaccard(df: DataFrame, a: str, b: str) -> DataFrame:
     """``df`` plus ``jaccard`` = |a ∩ b| / |a ∪ b| of two sorted-distinct
     long-array columns; empty ∪ empty ⇒ 1.0 (two normalization-empty docs
@@ -40,20 +50,19 @@ def with_jaccard(df: DataFrame, a: str, b: str) -> DataFrame:
     on 0/0. The division is the same IEEE double division as
     ``hashing.jaccard``, so scores are bit-identical to it.
 
-    ``|a ∩ b|`` is computed ONCE per row, behind a one-element explode:
-    a filter on ``jaccard`` (the verify threshold) cannot be pushed below
-    a Generate, so Catalyst no longer copies the expression into the join
-    condition below. Without the barrier the threshold predicate lands in
-    the BroadcastHashJoin condition and ``array_intersect`` runs up to
-    three times per candidate there (the CASE branches, no CSE in join
-    conditions) plus once more in the projection above (measured on 4
-    cores, 12k candidates of 100-800 shingles: 1.27-2.3 s without the
-    barrier, 0.64-0.82 s with it).
+    ``|a ∩ b|`` is computed ONCE per row, behind
+    :func:`with_intersect_size`'s explode barrier, so the verify
+    threshold is not copied into the join condition below. Without the
+    barrier the threshold predicate lands in the BroadcastHashJoin
+    condition and ``array_intersect`` runs up to three times per
+    candidate there (the CASE branches) plus once more in the projection
+    above (measured on 4 cores, 12k candidates of 100-800 shingles:
+    1.27-2.3 s without the barrier, 0.64-0.82 s with it).
     """
     inter = F.col("_inter")
     n_union = F.size(a) + F.size(b) - inter
     return (
-        df.withColumn("_inter", F.explode(F.array(F.size(F.array_intersect(a, b)))))
+        with_intersect_size(df, a, b, "_inter")
         .withColumn(
             "jaccard", F.when(n_union == 0, F.lit(1.0)).otherwise(inter / n_union)
         )

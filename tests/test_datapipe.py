@@ -1413,7 +1413,11 @@ def test_token_bag_clone_pairs_matches_brute_force(spark, seed):
     )
 
     rng = random.Random(seed)
-    vocab = [f"w{i}" for i in range(30)] + ["the", "def", "return"]
+    # "w\x001", "w1" and "w" collide under a careless multiset encoding
+    # (tok + str(i) maps ("w", 11) and ("w1", 1) to the same string;
+    # splitting at the FIRST NUL confuses ("w", i) with ("w\x001", i))
+    tricky = ["w\x001", "w1", "w"]
+    vocab = [f"w{i}" for i in range(30)] + ["the", "def", "return"] + tricky
     rows = []
     for d in range(24):
         n = rng.randint(0, 14)
@@ -1426,6 +1430,14 @@ def test_token_bag_clone_pairs_matches_brute_force(spark, seed):
     if len(base) >= 5:
         base[2] = "zzz"
     rows.append((100, " ".join(base)))
+    # the colliding tokens, each repeated past 10, in docs whose true
+    # overlaps straddle the threshold
+    for d in range(3):
+        counts = [rng.randint(9, 13) for _ in tricky]
+        toks = [t for t, c in zip(tricky, counts) for _ in range(c)]
+        rng.shuffle(toks)
+        rows.append((200 + d, " ".join(toks)))
+        rows.append((300 + d, " ".join(toks[: len(toks) * 3 // 4])))
 
     want = {}
     cnt = {d: Counter(t.split()) for d, t in rows}

@@ -5,9 +5,13 @@ from __future__ import annotations
 
 from itertools import combinations
 
+import pytest
+
 from autovalidate_backend_api_spark.operators.dedup_eval import (
     exact_pairs,
     lsh_recall_report,
+    ssjoin_filter_report,
+    ssjoin_filter_report_sql,
 )
 from autovalidate_backend_api_spark.operators.graph import triangle_stats
 
@@ -276,3 +280,53 @@ def test_lsh_scurve_is_monotone_over_populated_deciles(spark, sf_dir):
         assert r >= running - 0.15, rates
         running = max(running, r)
     assert rates[0] < 0.05 and rates[-1] == 1.0
+
+
+@pytest.mark.parametrize("seed", [0, 1, 2])
+def test_ssjoin_filter_report_matches_duckdb_twin(spark, seed):
+    """The Spark cascade equals its DuckDB twin on seeded token tables,
+    with planted edge cases: a pair sharing only non-prefix tokens, two
+    identical docs, 1-token docs, and df ties broken by token."""
+    import random
+
+    import duckdb
+    import pandas as pd
+
+    rng = random.Random(seed)
+    vocab = [f"t{i}" for i in range(25)]
+    docs = {
+        d: ["hot"] + rng.choices(vocab, k=rng.randint(1, 12)) for d in range(30)
+    }
+    # n = 3 ⇒ prefix length 1 (the rare r*); they share only hot, t0
+    docs[100] = ["r100", "hot", "t0"]
+    docs[101] = ["r101", "hot", "t0"]
+    docs[102] = docs[103] = ["i1", "i2", "i3", "i4", "i5"]
+    docs[104], docs[105] = ["solo"], ["solo"]
+    # tie_a and tie_b both have df 2: 110's prefix is tie_a (tok order),
+    # so (110, 111) shares only a non-prefix token and (110, 112) is a
+    # candidate — the other tie-break flips both
+    docs[110] = ["tie_a", "tie_b", "hot"]
+    docs[111] = ["tie_b", "hot"]
+    docs[112] = ["tie_a", "hot"]
+    rows = [(d, t) for d, ts in docs.items() for t in ts]
+
+    got = dict(
+        ssjoin_filter_report(
+            spark.createDataFrame(rows, "doc_id bigint, s string")
+        ).collect()
+    )
+    con = duckdb.connect()
+    try:
+        con.register("t", pd.DataFrame(rows, columns=["doc_id", "s"]))
+        want = dict(
+            con.sql(
+                ssjoin_filter_report_sql(
+                    "d AS (SELECT DISTINCT CAST(doc_id AS BIGINT) AS doc_id, s FROM t)"
+                )
+            ).fetchall()
+        )
+    finally:
+        con.close()
+    assert got == want
+    # the identical pairs (102, 103) and (104, 105) at least
+    assert want["verified"] >= 2 and want["verified_missed_by_filters"] == 0

@@ -224,3 +224,47 @@ def test_interval_concurrency_windows_run_on_collapsed_boundaries(spark, sf_dir)
     assert "Join" not in plan
     first_window = plan.index("Window")
     assert "HashAggregate" in plan[first_window:], plan
+
+
+def _cached_relations(plan: str) -> set[str]:
+    """Distinct caches in a plan, by column names (each scan of one
+    cache prints its own expression ids). Callers clear the cache
+    first: Spark also substitutes caches that earlier queries left
+    behind, such as a persisted copy of the same input."""
+    import re
+
+    return {
+        re.sub(r"#\d+L?", "", cols)
+        for cols in re.findall(r"InMemoryRelation \[([^\]]*)\]", plan)
+    }
+
+
+def test_ssjoin_filter_report_is_one_inverted_index_pass(spark, sf_dir):
+    """Candidates and the exact baseline come from ONE self-join on the
+    token: no cached intermediate, one join keyed on tok, and every
+    rank window partitioned (no single-task window over the whole
+    vocabulary)."""
+    import re
+
+    spark.catalog.clearCache()
+    plan = _plan_of("ssjoin_filter_report", spark, sf_dir)
+    assert not _cached_relations(plan), plan
+    assert len(re.findall(r"Join \[tok#\d+\], \[tok#\d+\]", plan)) == 1, plan
+    # WindowExec prints [exprs], [partition spec], [order spec] and
+    # omits an empty spec, so an unpartitioned window shows its order
+    # spec (or nothing) right after the expressions
+    assert not re.search(
+        r"\bWindow \[[^\[\]]*\](?:$|, \[[^\]]*(?:ASC|DESC) NULLS)", plan, re.M
+    ), plan
+
+
+def test_token_bag_verify_has_no_token_expansion(spark, sf_dir):
+    """Verification intersects per-doc bags: at most the one per-doc
+    cache, and no join keyed on (dst, tok) — the per-token expansion of
+    every candidate."""
+    import re
+
+    spark.catalog.clearCache()
+    plan = _plan_of("token_bag_clone_pairs", spark, sf_dir)
+    assert len(_cached_relations(plan)) <= 1, _cached_relations(plan)
+    assert not re.search(r"Join \[dst#\d+L?, tok#\d+\]", plan), plan

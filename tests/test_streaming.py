@@ -145,12 +145,20 @@ def test_sessionize_stateful_matches_batch_on_ordered_stream(spark, tmp_path):
         df.coalesce(1).write.parquet(f"{src}/tmp{i}")
         all_rows += rows
     import glob
+    import os
     import shutil
+    import time
 
     for i in range(len(files)):
         part = glob.glob(f"{src}/tmp{i}/part-*.parquet")[0]
         shutil.copy(part, f"{src}/file_{i}.parquet")
         shutil.rmtree(f"{src}/tmp{i}")
+    # the stream takes files in modification-time order, and back-to-back
+    # copies can share a millisecond stamp (then the order is arbitrary):
+    # space them a second apart so the files arrive in event-time order
+    now = time.time()
+    for i in range(len(files)):
+        os.utime(f"{src}/file_{i}.parquet", (now + i, now + i))
 
     emitted, n_batches = _stream_to_memory(
         spark, src, schema, lambda s: sessionize_stateful(s, 30), "sess_sf"

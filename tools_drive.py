@@ -2,14 +2,24 @@
 oracle at sf0.01 with a plain SparkSession — the grading driver's
 comparison, replicated locally. Prints one line per gate + a summary.
 
+Drives the checkout this script lives in (its tests/, its
+__spark_entry__.py and, in Spark's Python workers, its package) at
+local[$SPARK_GRAFT_CPUS] (8 when unset), from any working directory.
+
 Usage: python tools_drive.py [--sf /root/testdata/sf0.01] [--only k1,k2]
 """
 import argparse
 import importlib.util
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo/tests")
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, os.path.join(ROOT, "tests"))
+# Spark's Python workers import the package too: this checkout first
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 from oracle_harness import duck_connection, compare  # noqa: E402
 
 
@@ -20,7 +30,7 @@ def main() -> None:
     args = ap.parse_args()
 
     spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", "/root/repo/__spark_entry__.py"
+        "__spark_entry__", os.path.join(ROOT, "__spark_entry__.py")
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
@@ -28,7 +38,9 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     spark = (
-        SparkSession.builder.master("local[8]")
+        SparkSession.builder.master(
+            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]"
+        )
         .config("spark.sql.shuffle.partitions", "8")
         .getOrCreate()
     )
